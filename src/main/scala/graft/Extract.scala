@@ -20,8 +20,10 @@ import graft.sources.{CrawlCorpus, CrawlRow, ParquetManifestTable, Resume}
   * }}}
   *
   * Per run: resume-filter the input against the committed output (exactly
-  * once per url, crash-safe — see TableIO), skew-aware salted extraction,
-  * one atomic snapshot commit of the documents batch, a metrics-table
+  * once per url, crash-safe — see TableIO), one salted url-hash
+  * repartition into `--partitions` partitions and one map-local
+  * extraction pass (the same plan under every flag), one atomic snapshot
+  * commit of the documents batch, a metrics-table
   * append of the per-partition lineage rows, and (with `--sinks`) the
   * seven per-sink tables; with `--curate` the whole training-data
   * curation stage runs over everything committed so far and lands as a
@@ -263,14 +265,12 @@ object Extract {
         .map(b => f"$b%02x").mkString.take(16)
 
     val parts = if (a.partitions > 0) a.partitions else spark.sparkContext.defaultParallelism
-    // default path: skew-aware (salted repartition + dedicated big-payload
-    // pass); the opt-in columns and per-row passwords ride the plain
-    // salted path
-    val docs =
-      if (a.passwordColumn != null) {
-        // per-document passwords ride with the row (the reference takes -p
-        // per invocation; at corpus scale it is a column); null falls back
-        // to the corpus default
+    // per-document passwords ride with the row (the reference takes -p per
+    // invocation; at corpus scale it is a column); a null password falls
+    // back to the corpus default
+    val withPasswords =
+      if (a.passwordColumn == null) pending.toDF().withColumn("__pw", lit(null).cast("string"))
+      else {
         require(raw != null, "--password-column requires a parquet input")
         // join against a DEDUPLICATED url->password map: if the input
         // parquet carries duplicate urls, a plain join would fan each
@@ -287,22 +287,20 @@ object Extract {
               // last tiebreak: copies identical in every row field but the
               // password still resolve deterministically (non-null wins)
               col(a.passwordColumn))).as("__pw"))
-        val salted = ExtractPipeline.saltedRepartitionByUrl(pending, parts)
-          .toDF().join(pwMap, Seq("url"), "left")
-        ExtractPipeline.extractDocsWithPasswords(
-          salted.select(
-              struct(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")).as("_1"),
-              col("__pw").as("_2"))
-            .as[(CrawlRow, String)],
-          defaultPassword = a.password,
-          objectStreams = a.objectStreams,
-          includeRaw = a.includeRaw, includeEmbedded = a.includeEmbedded)
-      } else if (!a.includeRaw && !a.includeEmbedded && !a.objectStreams)
-        ExtractPipeline.extractDocsSkewAware(pending, a.password, numPartitions = parts)
-      else ExtractPipeline.extractDocs(
-        ExtractPipeline.saltedRepartitionByUrl(pending, parts), a.password,
-        includeRaw = a.includeRaw, objectStreams = a.objectStreams,
-        includeEmbedded = a.includeEmbedded)
+        pending.toDF().join(pwMap, Seq("url"), "left")
+      }
+    // one plan for every flag combination: one salted url-hash repartition
+    // into `parts` partitions (after the password join, so `--partitions`
+    // sets the extraction stage), then one map-local extraction pass
+    val docs = ExtractPipeline.extractDocsWithPasswords(
+      ExtractPipeline.saltedRepartitionByUrl(withPasswords, parts)
+        .select(
+          struct(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")).as("_1"),
+          col("__pw").as("_2"))
+        .as[(CrawlRow, String)],
+      defaultPassword = a.password,
+      objectStreams = a.objectStreams,
+      includeRaw = a.includeRaw, includeEmbedded = a.includeEmbedded)
 
     docsTable.commit(docs.toDF(), batchId)
     // downstream stages read the COMMITTED batch back instead of

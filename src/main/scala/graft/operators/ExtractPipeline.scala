@@ -61,7 +61,7 @@ final case class ExtractedDoc(
   * Plan shape (see `.explain`): the whole extraction is a single map-local
   * `MapPartitionsExec` over the scan — zero shuffles. Column pruning happens
   * in the scan because the `select` runs BEFORE the opaque lambda. Shuffles
-  * appear only where explicitly requested (salted repartition for skew,
+  * appear only where explicitly requested (salted url-hash repartition,
   * metrics groupBy, resume anti-join).
   */
 object ExtractPipeline {
@@ -115,6 +115,7 @@ object ExtractPipeline {
             else null
           }
         }
+      val errors = splitLines(r.errors)
       ExtractedDoc(
         url = row.url, warc_ts = row.warc_ts, lang = row.lang, kind = "pdf",
         contents = r.contents,
@@ -122,7 +123,7 @@ object ExtractPipeline {
         urls = splitLines(r.urls),
         files = splitLines(r.files),
         commands = splitLines(r.commands),
-        errors = splitLines(r.errors),
+        errors = errors,
         embedded_md5 = r.embedded.map(_.md5),
         embedded_name = r.embedded.map(_.name),
         embedded_data = embeddedData,
@@ -133,7 +134,7 @@ object ExtractPipeline {
         n_objects = r.nObjects,
         n_streams = r.nStreams,
         n_filters = r.filtersApplied.valuesIterator.sum,
-        n_errors = splitLines(r.errors).size.toLong,
+        n_errors = errors.size.toLong,
         raw = if (includeRaw) r.raw else null)
     } else {
       // per-document isolation, same contract as the pdf kernel: an
@@ -178,11 +179,8 @@ object ExtractPipeline {
                   includeEmbedded: Boolean = false,
                   maxEmbeddedBytes: Long = DefaultMaxEmbeddedBytes): Dataset[ExtractedDoc] = {
     import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val scratch = new HtmlExtract.Scratch // one per task
-      it.map(row => extractOne(row, password, scratch, includeRaw, objectStreams,
-        includeEmbedded, maxEmbeddedBytes))
-    }
+    ds.mapPartitions(it => extractPartition(it.map(row => (row, null)), password,
+      includeRaw, objectStreams, includeEmbedded, maxEmbeddedBytes))
   }
 
   /** Per-document password variant: the reference takes `-p` per invocation
@@ -197,38 +195,32 @@ object ExtractPipeline {
                                includeEmbedded: Boolean = false,
                                maxEmbeddedBytes: Long = DefaultMaxEmbeddedBytes): Dataset[ExtractedDoc] = {
     import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val scratch = new HtmlExtract.Scratch
-      it.map { case (row, pw) =>
-        extractOne(row, if (pw == null) defaultPassword else pw, scratch, includeRaw,
-          objectStreams, includeEmbedded, maxEmbeddedBytes)
-      }
+    ds.mapPartitions(extractPartition(_, defaultPassword,
+      includeRaw, objectStreams, includeEmbedded, maxEmbeddedBytes))
+  }
+
+  /** The one per-partition body behind both transforms: one HTML scratch
+    * per task, a null row password falls back to `defaultPassword`. */
+  private def extractPartition(rows: Iterator[(CrawlRow, String)], defaultPassword: String,
+                               includeRaw: Boolean, objectStreams: Boolean,
+                               includeEmbedded: Boolean,
+                               maxEmbeddedBytes: Long): Iterator[ExtractedDoc] = {
+    val scratch = new HtmlExtract.Scratch
+    rows.map { case (row, pw) =>
+      extractOne(row, if (pw == null) defaultPassword else pw, scratch, includeRaw,
+        objectStreams, includeEmbedded, maxEmbeddedBytes)
     }
   }
 
   /** Salted url-hash repartition (north rule): spreads url-clustered inputs
-    * evenly before the map-local extraction. `salt` rotates the hash per
-    * round so retries land on different executors. */
-  def saltedRepartitionByUrl(ds: Dataset[CrawlRow], numPartitions: Int, salt: Int = 0): Dataset[CrawlRow] =
-    ds.repartition(numPartitions, pmod(xxhash64(col("url"), lit(salt)), lit(numPartitions)))
-
-  /** Skew handling for pathological multi-GB payloads: rows above the size
-    * threshold go through a dedicated pass with one doc per partition-ish
-    * granularity; the rest stay on the fast path. Union preserves the
-    * one-row-per-url contract. */
-  def extractDocsSkewAware(ds: Dataset[CrawlRow], password: String = "",
-                           bigPayloadBytes: Long = 64L * 1024 * 1024,
-                           numPartitions: Int = 0): Dataset[ExtractedDoc] = {
-    val spark = ds.sparkSession
-    val parts = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
-    // coalesce: a null payload must stay on the small path (extractOne
-    // handles it as empty), not be dropped by a null predicate on both sides
-    val payloadLen = coalesce(length(col("html")), lit(0))
-    val small = ds.filter(payloadLen <= bigPayloadBytes)
-    val big = ds.filter(payloadLen > bigPayloadBytes)
-    extractDocs(saltedRepartitionByUrl(small, parts), password)
-      .unionByName(extractDocs(big.repartition(parts * 4, xxhash64(col("url"))), password))
-  }
+    * evenly before the map-local extraction. The partitioning key is the
+    * full 64-bit `xxhash64(url, salt)`, which `HashPartitioning` hashes
+    * again into `numPartitions` bins; reducing it modulo `numPartitions`
+    * first would leave only `numPartitions` distinct keys, and their second
+    * hash collides into a few bins. `salt` rotates the hash per round so
+    * retries land on different executors. Any frame with a `url` column. */
+  def saltedRepartitionByUrl[T](ds: Dataset[T], numPartitions: Int, salt: Int = 0): Dataset[T] =
+    ds.repartition(numPartitions, xxhash64(col("url"), lit(salt)))
 
   /** Per-partition extraction metrics + lineage rows, appended to the
     * metrics table each batch (objects decoded, streams, filters, failures,

@@ -128,6 +128,52 @@ class ExtractMainSpec extends AnyFunSuite {
       "a duplicated doc's lines must not strip its own representative")
   }
 
+  test("--partitions N sets the extraction stage: N metrics rows with and without --password-column") {
+    import spark.implicits._
+    val inDir = java.nio.file.Files.createTempDirectory("graft_parts_in").toString
+    CrawlCorpus.crawl(spark, 48, 42L).toDF().withColumn("pw", lit(null).cast("string"))
+      .write.mode("overwrite").parquet(inDir)
+    for (flags <- Seq(Seq.empty[String], Seq("--password-column", "pw"))) {
+      val outDir = java.nio.file.Files.createTempDirectory("graft_parts_out").toString
+      Extract.main((Seq(inDir, outDir, "--partitions", "3") ++ flags).toArray)
+      val metrics = new graft.sources.ParquetManifestTable(s"$outDir/metrics").read(spark)
+      assert(metrics.count() == 3, s"flags $flags: ${metrics.collect().mkString(",")}")
+      assert(metrics.agg(sum(col("n_docs"))).head().getLong(0) == 48L)
+    }
+  }
+
+  test("extract job: the documents commit scans the input once, with no Union") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    object walk extends AdaptiveSparkPlanHelper
+    val inDir = java.nio.file.Files.createTempDirectory("graft_plan_in").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_plan_out").toString
+    CrawlCorpus.crawl(spark, 24, 42L).toDF().write.mode("overwrite").parquet(inDir)
+    // the final plan of the write into the documents table's staging dir
+    val docsWrite = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        walk.collect(qe.executedPlan) {
+          case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+              if c.outputPath.toString.contains(s"$outDir/documents/") => w
+        }.foreach(docsWrite.put)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try Extract.main(Array(inDir, outDir, "--partitions", "3"))
+    finally spark.listenerManager.unregister(listener)
+    // listeners run on the asynchronous listener bus
+    val plan = docsWrite.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    assert(plan != null, "no documents-commit write was observed")
+    val inputScans = walk.collect(plan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(inDir)) => s
+    }
+    assert(inputScans.size == 1, plan.toString)
+    assert(walk.collect(plan) { case u: UnionExec => u }.isEmpty, plan.toString)
+  }
+
   test("extract job with --password-column: each row decrypts with its own password") {
     import spark.implicits._
     val inDir = java.nio.file.Files.createTempDirectory("graft_pw_in").toString

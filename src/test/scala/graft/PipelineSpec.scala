@@ -59,10 +59,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(fingerprint(3) == fingerprint(13))
   }
 
-  test("skew-aware extraction preserves the one-row-per-url contract") {
-    val docs = ExtractPipeline.extractDocsSkewAware(corpus(40), bigPayloadBytes = 2000, numPartitions = 4)
+  test("salted extraction preserves the one-row-per-url contract") {
+    val docs = ExtractPipeline.extractDocs(ExtractPipeline.saltedRepartitionByUrl(corpus(40), 4))
     assert(docs.count() == 40)
     assert(docs.select("url").distinct().count() == 40)
+  }
+
+  test("salted repartition spreads urls: no empty partition, largest <= 1.5x the mean") {
+    import spark.implicits._
+    val urls = (0 until 2000).map(i =>
+      graft.sources.CrawlRow(s"test://host$i/doc$i.html", null, null, "", "en")).toDS()
+    for (n <- Seq(2, 4, 8); salt <- Seq(0, 1)) {
+      val sizes = ExtractPipeline.saltedRepartitionByUrl(urls, n, salt)
+        .rdd.mapPartitions(it => Iterator(it.size)).collect()
+      assert(sizes.length == n && sizes.sum == 2000)
+      assert(sizes.forall(_ > 0), s"n=$n salt=$salt: empty partition in ${sizes.mkString("/")}")
+      assert(sizes.max <= 1.5 * 2000 / n, s"n=$n salt=$salt: ${sizes.mkString("/")}")
+    }
   }
 
   test("TableIO: atomic commit + exact resume") {
@@ -196,13 +209,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(!out(1).ok && out(1).failure == "incorrect password")
   }
 
-  test("skew-aware extraction keeps null-payload rows on the small path") {
+  test("salted extraction extracts null-payload rows as empty, never drops them") {
     import spark.implicits._
     val withNull = corpus(10).map(r =>
       if (r.url.split("/")(3).toLong == 1L) r.copy(html = null) else r)
-    val docs = ExtractPipeline.extractDocsSkewAware(withNull, bigPayloadBytes = 2000, numPartitions = 4)
-    assert(docs.count() == 10) // the null-html row is extracted (as empty), not dropped
-    assert(docs.select("url").distinct().count() == 10)
+    val docs = ExtractPipeline.extractDocs(ExtractPipeline.saltedRepartitionByUrl(withNull, 4))
+    val out = docs.collect()
+    assert(out.length == 10) // the null-html row is extracted (as empty), not dropped
+    assert(out.map(_.url).distinct.length == 10)
+    val empty = out.filter(_.url.split("/")(3).toLong == 1L)
+    assert(empty.length == 1 && empty.head.contents.isEmpty && empty.head.raw_size == 0L)
   }
 
   test("TableIO: a crash between data-dir move and manifest move is retryable") {
