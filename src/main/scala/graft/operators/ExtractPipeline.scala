@@ -88,7 +88,8 @@ object ExtractPipeline {
   private def md5hex(b: Array[Byte]): String =
     graft.pdf.Crypto.md5(b).map(x => f"$x%02x").mkString
 
-  /** Extract a single row. Pure; never throws. */
+  /** Extract a single row. Pure; a kernel exception that ends only its
+    * document becomes a failure row (see [[PdfExtract.parse]]). */
   def extractOne(row: CrawlRow, password: String): ExtractedDoc =
     extractOne(row, password, new HtmlExtract.Scratch)
 

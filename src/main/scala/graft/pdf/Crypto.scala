@@ -3,6 +3,7 @@ package graft.pdf
 import java.security.MessageDigest
 import javax.crypto.Cipher
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
+import scala.util.control.NonFatal
 
 /** Decryption, replicating /root/reference/pdf/encryption.go.
   * Standard security handler only; V in {1,2,4}, R in {2,3,4};
@@ -66,7 +67,7 @@ final class AesDecryptor(key: Array[Byte]) extends Decryptor {
         new IvParameterSpec(data, 0, 16))
       val plain = cipher.doFinal(data, 16, data.length - 16)
       System.arraycopy(plain, 0, data, 16, plain.length)
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 }
 

@@ -1,7 +1,9 @@
 package graft.pdf
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
+import java.util.concurrent.{ExecutionException, FutureTask}
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** ToUnicode CMap font (/root/reference/pdf/font.go).
   * Width = byte-length of the last-seen bfrange start / bfchar key; every
@@ -15,10 +17,7 @@ final class Font(val cmap: mutable.LongMap[Array[Byte]], var width: Int) {
     val out = new java.io.ByteArrayOutputStream()
     var i = 0
     while (i + width <= b.length) {
-      var k = 0L
-      var j = 0
-      while (j < width) { k = k * 256 + (b(i + j) & 0xff); j += 1 }
-      cmap.get(k) match {
+      cmap.get(Filters.bytesToInt(b, i, width)) match {
         case Some(v) => out.write(v, 0, v.length)
         case None    => out.write(b, i, width)
       }
@@ -56,11 +55,11 @@ object Font {
           if (startB.isEmpty) broke = true
           else {
             font.width = startB.length
-            val start = Filters.bytesToInt(startB)
+            val start = Filters.bytesToInt(startB, 0, startB.length)
             val endB = parser.readHexString(NoDecryptor).bytes
             if (endB.isEmpty) broke = true
             else {
-              val end = Filters.bytesToInt(endB)
+              val end = Filters.bytesToInt(endB, 0, endB.length)
               val value = parser.readHexString(NoDecryptor).bytes
               if (value.isEmpty) broke = true
               else {
@@ -83,7 +82,7 @@ object Font {
           if (keyB.isEmpty) broke = true
           else {
             font.width = keyB.length
-            val key = Filters.bytesToInt(keyB)
+            val key = Filters.bytesToInt(keyB, 0, keyB.length)
             val value = parser.readHexString(NoDecryptor).bytes
             if (value.isEmpty) broke = true
             else font.cmap(key) = value
@@ -318,57 +317,48 @@ object PdfExtract {
     * isolation preserved. */
   private val BigStackBytes: Long = 512L * 1024 * 1024
 
-  private def isStackOverflow(r: ParsedPdf): Boolean =
-    r.failure != null && r.failure.startsWith("internal: StackOverflowError")
-
-  private def failureResult(message: String): ParsedPdf =
-    ParsedPdf(
-      contents = Array.emptyByteArray, javascript = Array.emptyByteArray,
-      urls = Array.emptyByteArray, files = Array.emptyByteArray,
-      commands = Array.emptyByteArray, errors = Array.emptyByteArray,
-      raw = Array.emptyByteArray, embedded = Seq.empty,
-      ok = false, failure = message,
-      nObjects = 0L, nStreams = 0L, filtersApplied = Map.empty)
-
+  /** A fatal error of the retry thread is rethrown on the caller's. */
   private def parseOnBigStack(payload: Array[Byte], password: String,
                               objectStreams: Boolean): ParsedPdf = {
-    val out = new java.util.concurrent.atomic.AtomicReference[ParsedPdf]
-    val t = new Thread(null,
-      () => out.set(parseHere(payload, password, objectStreams)),
-      "graft-pdf-bigstack", BigStackBytes)
+    val task = new FutureTask[ParsedPdf](() =>
+      parseHere(payload, password, objectStreams, onBigStack = true))
+    val t = new Thread(null, task, "graft-pdf-bigstack", BigStackBytes)
     t.setDaemon(true)
     t.start()
-    try t.join()
-    catch {
-      case _: InterruptedException =>
-        // task kill mid-join: keep the never-throws contract, restore the
-        // interrupt flag so Spark's cancellation still observes it
-        Thread.currentThread().interrupt()
-        return failureResult("internal: interrupted during big-stack retry")
-    }
-    val r = out.get()
-    // the retry thread died before publishing (e.g. OOM): report THAT,
-    // never a misleading empty-payload parse
-    if (r != null) r else failureResult("internal: big-stack retry produced no result")
+    try task.get()
+    catch { case e: ExecutionException => throw e.getCause }
   }
 
   /** The corpus-facing equivalent of `pdf.Parse(path, password, outdir)`
     * (/root/reference/pdf/pdf.go:8-43), over an in-memory payload. Objects
     * are extracted in ascending object-number order (the reference iterates
     * a Go map, i.e. nondeterministically; sorted order is our documented
-    * deterministic canonicalization). Never throws.
+    * deterministic canonicalization). Exceptions follow [[isolates]]: a
+    * StackOverflowError is retried once on a big stack first.
     *
     * `objectStreams = true` opts into expanding compressed (type-2)
     * objects out of /ObjStm containers — the reference resolves them to
     * null, so this is OFF by default to keep the byte-identity gate. */
   def parse(payload: Array[Byte], password: String = "",
             objectStreams: Boolean = false): ParsedPdf = {
-    val r = parseHere(payload, password, objectStreams)
-    if (isStackOverflow(r)) parseOnBigStack(payload, password, objectStreams) else r
+    try parseHere(payload, password, objectStreams, onBigStack = false)
+    catch { case _: StackOverflowError => parseOnBigStack(payload, password, objectStreams) }
+  }
+
+  /** Whether a throwable ends only its own document, as a failure row:
+    * a non-fatal exception; an OutOfMemoryError, because the decoders have
+    * no output budget yet and a small flate or LZW bomb can make one
+    * document ask for more than a byte array can hold; and a
+    * StackOverflowError once it has had the big-stack retry. Anything
+    * else (other VM errors, interrupts, linkage errors) fails the task. */
+  private[pdf] def isolates(t: Throwable, onBigStack: Boolean): Boolean = t match {
+    case NonFatal(_) | _: OutOfMemoryError => true
+    case _: StackOverflowError => onBigStack
+    case _ => false
   }
 
   private def parseHere(payload: Array[Byte], password: String,
-                        objectStreams: Boolean = false): ParsedPdf = {
+                        objectStreams: Boolean, onBigStack: Boolean): ParsedPdf = {
     val out = new DocSink
     var ok = true
     var failure: String = null
@@ -389,7 +379,7 @@ object PdfExtract {
         }
       }
     } catch {
-      case t: Throwable =>
+      case t: Throwable if isolates(t, onBigStack) =>
         ok = false
         failure = "internal: " + t.getClass.getSimpleName + ": " + String.valueOf(t.getMessage)
     }

@@ -1,7 +1,7 @@
 package graft.pdf
 
+import java.io.ByteArrayOutputStream
 import java.util.zip.{DataFormatException, Inflater}
-import scala.collection.mutable.ArrayBuffer
 
 /** Stream decode filters, replicating /root/reference/pdf/filters.go
   * byte-for-byte, including its tolerant/failure semantics:
@@ -11,7 +11,16 @@ import scala.collection.mutable.ArrayBuffer
   */
 object Filters {
 
-  private val Whitespace: Set[Byte] = "\u0000\t\n\f\r ".getBytes("ISO-8859-1").toSet
+  /** PDF whitespace (pdf/parser.go:17), shared with the lexer. */
+  @inline private[pdf] def isWs(b: Int): Boolean =
+    b == 0x00 || b == '\t' || b == '\n' || b == '\f' || b == '\r' || b == ' '
+
+  /** Hex digit value, -1 for a non-hex byte (or EOF), shared with the lexer. */
+  @inline private[pdf] def hexVal(b: Int): Int =
+    if (b >= '0' && b <= '9') b - '0'
+    else if (b >= 'a' && b <= 'f') b - 'a' + 10
+    else if (b >= 'A' && b <= 'F') b - 'A' + 10
+    else -1
 
   /** Dispatcher (filters.go:14-47). `onApplied` feeds the metrics channel. */
   def decodeStream(filter: String, data: Array[Byte], parms: PDict,
@@ -30,40 +39,34 @@ object Filters {
   /** filters.go:49-97: hex pairs, whitespace skipped, '>' EOD, odd final digit
     * padded with '0'; a pair containing a non-hex char is dropped entirely. */
   def asciiHexDecode(data: Array[Byte]): Array[Byte] = {
-    val out = new ArrayBuffer[Byte](data.length)
+    val out = new ByteArrayOutputStream(data.length / 2)
     var i = 0
     var done = false
     while (i < data.length && !done) {
       val b1 = data(i)
-      if (Whitespace.contains(b1)) { i += 1 }
+      if (isWs(b1)) { i += 1 }
       else if (b1 == '>') { done = true }
       else {
         var b2: Byte = '0'
         var scanning = true
         while (scanning && i + 1 < data.length) {
-          if (Whitespace.contains(data(i + 1))) i += 1
+          if (isWs(data(i + 1))) i += 1
           else if (data(i + 1) == '>') scanning = false
           else { i += 1; b2 = data(i); scanning = false }
         }
         val hi = hexVal(b1); val lo = hexVal(b2)
-        if (hi >= 0 && lo >= 0) out += ((hi << 4) | lo).toByte
+        if (hi >= 0 && lo >= 0) out.write(hi * 16 + lo)
         i += 1
       }
     }
-    out.toArray
+    out.toByteArray
   }
-
-  private def hexVal(b: Byte): Int =
-    if (b >= '0' && b <= '9') b - '0'
-    else if (b >= 'a' && b <= 'f') b - 'a' + 10
-    else if (b >= 'A' && b <= 'F') b - 'A' + 10
-    else -1
 
   /** filters.go:99-163: base-85; 'z' => 4 zero bytes only at group start
     * (skipped mid-group), '~' EOD, whitespace/invalid bytes skipped, partial
     * group of n>=2 chars emits n-1 bytes (a single leftover char is dropped). */
   def ascii85Decode(data: Array[Byte]): Array[Byte] = {
-    val out = new ArrayBuffer[Byte](data.length)
+    val out = new ByteArrayOutputStream(data.length)
     var v = 0L // uint32 arithmetic, keep in Long and mask
     var n = 0
     var i = 0
@@ -74,35 +77,35 @@ object Filters {
           var m = n
           while (m < 5) { v = (v * 85) & 0xffffffffL; m += 1 }
           var k = 0
-          while (k < n - 1) { out += ((v >>> (24 - 8 * k)) & 0xff).toByte; k += 1 }
+          while (k < n - 1) { out.write((v >>> (24 - 8 * k)).toInt); k += 1 }
         }
         done = true
       } else {
         val b = data(i); i += 1
-        if (Whitespace.contains(b)) {}
+        if (isWs(b)) {}
         else if (b == 'z') {
-          if (n == 0) { out += 0; out += 0; out += 0; out += 0 }
+          if (n == 0) { out.write(0); out.write(0); out.write(0); out.write(0) }
         } else if (b < '!' || b > 'u') {}
         else {
           n += 1
           v = (v * 85 + (b - 33)) & 0xffffffffL
           if (n >= 5) {
-            out += ((v >>> 24) & 0xff).toByte
-            out += ((v >>> 16) & 0xff).toByte
-            out += ((v >>> 8) & 0xff).toByte
-            out += (v & 0xff).toByte
+            out.write((v >>> 24).toInt)
+            out.write((v >>> 16).toInt)
+            out.write((v >>> 8).toInt)
+            out.write(v.toInt)
             v = 0; n = 0
           }
         }
       }
     }
-    out.toArray
+    out.toByteArray
   }
 
   /** filters.go:165-208: length byte L: 128=EOD; L<128 copy L+1 literals;
     * L>128 repeat next byte 257-L times; truncation tolerated. */
   def runLengthDecode(data: Array[Byte]): Array[Byte] = {
-    val out = new ArrayBuffer[Byte](data.length)
+    val out = new ByteArrayOutputStream(data.length)
     var i = 0
     var done = false
     while (i < data.length && !done) {
@@ -112,20 +115,20 @@ object Filters {
         val len = length + 1
         i += 1
         if (i >= data.length) done = true
-        else if (i + len > data.length) { out ++= data.slice(i, data.length); done = true }
-        else { out ++= data.slice(i, i + len); i += len }
+        else if (i + len > data.length) { out.write(data, i, data.length - i); done = true }
+        else { out.write(data, i, len); i += len }
       } else {
         i += 1
         if (i >= data.length) done = true
         else {
           val times = 257 - length
           var t = 0
-          while (t < times) { out += data(i); t += 1 }
+          while (t < times) { out.write(data(i)); t += 1 }
           i += 1
         }
       }
     }
-    out.toArray
+    out.toByteArray
   }
 
   /** filters.go:210-228: zlib inflate; bad header or zero-bytes-decoded error
@@ -139,22 +142,22 @@ object Filters {
     if ((flg & 0x20) != 0) return data // FDICT unsupported without dictionary
     val inf = new Inflater()
     inf.setInput(data)
-    val out = new ArrayBuffer[Byte](data.length * 4)
+    val out = new ByteArrayOutputStream(math.min(data.length, 1 << 28) * 4) // no Int overflow
     val buf = new Array[Byte](8192)
     var failed = false
     try {
       var going = true
       while (going && !inf.finished()) {
         val k = inf.inflate(buf)
-        if (k > 0) out ++= buf.view.slice(0, k)
+        if (k > 0) out.write(buf, 0, k)
         else going = false // needs more input / dictionary: treat as stream end
       }
     } catch { case _: DataFormatException => failed = true }
     inf.end()
     // Go: only a zero-bytes-decoded *error* falls back to raw input;
     // a valid empty stream decodes to empty (filters.go:221-224).
-    if (out.isEmpty && failed) return data
-    reversePredictor(out.toArray, parms)
+    if (out.size() == 0 && failed) return data
+    reversePredictor(out.toByteArray, parms)
   }
 
   /** filters.go:230-253: /EarlyChange default 1 => TIFF-variant LZW;
@@ -205,7 +208,10 @@ object Filters {
     }
 
     if (predictor >= 10 && predictor <= 15) {
-      val out = new ArrayBuffer[Byte](data.length)
+      // each row reads the rows already written above it: write into a plain
+      // array (at most one byte out per byte in) and trim once at the end
+      val out = new Array[Byte](data.length)
+      var w = 0
       val dRowWidth = rowWidth
       val pngRowWidth = rowWidth + 1
       var method = predictor - 10
@@ -219,11 +225,11 @@ object Filters {
           val cur = data(r + c) & 0xff
           val left = if (dc > 0) out(dr + dc - 1) & 0xff else 0
           val up = if (dr + dc - dRowWidth >= 0) out(dr + dc - dRowWidth) & 0xff else 0
-          method match {
-            case 0 => out += cur.toByte
-            case 1 => out += ((cur + left) % 256).toByte
-            case 2 => out += ((cur + up) % 256).toByte
-            case 3 => out += ((cur + (left + up) / 2) % 256).toByte
+          out(w) = method match {
+            case 0 => cur.toByte
+            case 1 => ((cur + left) % 256).toByte
+            case 2 => ((cur + up) % 256).toByte
+            case 3 => ((cur + (left + up) / 2) % 256).toByte
             case 4 =>
               val upLeft =
                 if (dr + dc - dRowWidth - 1 >= 0 && dc > 0) out(dr + dc - dRowWidth - 1) & 0xff
@@ -234,14 +240,15 @@ object Filters {
                 if (pl <= pu && pl <= pul) left
                 else if (pu <= pul) up
                 else upLeft
-              out += ((cur + pred) % 256).toByte
-            case _ => out += cur.toByte
+              ((cur + pred) % 256).toByte
+            case _ => cur.toByte
           }
+          w += 1
           c += 1
         }
         r += pngRowWidth
       }
-      return out.toArray
+      return java.util.Arrays.copyOf(out, w)
     }
 
     data
@@ -274,11 +281,11 @@ object Filters {
     }
   }
 
-  /** pdf/utility.go:59-66 (big-endian bytes to int) */
-  def bytesToInt(b: Array[Byte]): Long = {
+  /** pdf/utility.go:59-66: b[off, off + n) as a big-endian unsigned value. */
+  def bytesToInt(b: Array[Byte], off: Int, n: Int): Long = {
     var v = 0L
-    var i = 0
-    while (i < b.length) { v = v * 256 + (b(i) & 0xff); i += 1 }
+    var i = off
+    while (i < off + n) { v = v * 256 + (b(i) & 0xff); i += 1 }
     v
   }
 }
@@ -299,7 +306,7 @@ object Lzw {
   def decode(data: Array[Byte], earlyChange: Boolean): Array[Byte] = {
     val clear = 1 << LitWidth // 256
     val eof = clear + 1 // 257
-    val out = new ArrayBuffer[Byte](data.length * 3)
+    val out = new ByteArrayOutputStream(math.min(data.length, 1 << 28) * 3) // no Int overflow
     val suffix = new Array[Byte](1 << MaxWidth)
     val prefix = new Array[Int](1 << MaxWidth)
 
@@ -311,6 +318,8 @@ object Lzw {
     var bits = 0L
     var nBits = 0
     var i = 0
+    // one expansion, filled back to front: every table entry's prefix is an
+    // older entry, so a chain holds at most one byte per entry plus one
     val chainBuf = new Array[Byte](1 << MaxWidth)
 
     var done = false
@@ -326,44 +335,32 @@ object Lzw {
       else {
         val code = ((bits >>> (nBits - width)) & ((1 << width) - 1)).toInt
         nBits -= width
-        if (code < clear) {
-          out += code.toByte
-          if (last != Invalid) {
-            suffix(hi) = code.toByte
-            prefix(hi) = last
-          }
-          last = code; hi += 1
-          if (hi >= overflow - (if (earlyChange) 1 else 0)) {
-            if (width == MaxWidth) {
-              last = Invalid
-              if (!earlyChange) hi -= 1
-            } else { width += 1; overflow = overflow << 1 }
-          }
-        } else if (code == clear) {
+        if (code == clear) {
           width = LitWidth + 1
           hi = eof
           overflow = 1 << width
           last = Invalid
         } else if (code == eof) {
           done = true
-        } else if (code <= hi) {
+        } else if (code > hi) {
+          done = true; errored = true // invalid code: keep partial output
+        } else {
+          // a literal expands to itself, a table code to its prefix chain
           var c = code
-          var n = 0
+          var p = chainBuf.length
           if (code == hi && last != Invalid) {
             // code == hi expands to last expansion + head of last expansion
             c = last
             while (c >= clear) c = prefix(c)
-            chainBuf(n) = c.toByte; n += 1
+            p -= 1; chainBuf(p) = c.toByte
             c = last
           }
           while (c >= clear) {
-            chainBuf(n) = suffix(c); n += 1
+            p -= 1; chainBuf(p) = suffix(c)
             c = prefix(c)
           }
-          chainBuf(n) = c.toByte; n += 1
-          // chainBuf holds the expansion reversed
-          var k = n - 1
-          while (k >= 0) { out += chainBuf(k); k -= 1 }
+          p -= 1; chainBuf(p) = c.toByte
+          out.write(chainBuf, p, chainBuf.length - p)
           if (last != Invalid) {
             suffix(hi) = c.toByte
             prefix(hi) = last
@@ -375,11 +372,9 @@ object Lzw {
               if (!earlyChange) hi -= 1
             } else { width += 1; overflow = overflow << 1 }
           }
-        } else {
-          done = true; errored = true // invalid code: keep partial output
         }
       }
     }
-    if (out.isEmpty && errored) null else out.toArray
+    if (out.size() == 0 && errored) null else out.toByteArray
   }
 }

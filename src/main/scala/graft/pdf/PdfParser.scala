@@ -10,7 +10,7 @@ import scala.collection.mutable
 final class DocSink {
   import java.io.ByteArrayOutputStream
   val commands = new ByteArrayOutputStream()
-  val errors = new ByteArrayOutputStream()
+  val errors = new ErrorSink
   val files = new ByteArrayOutputStream()
   val javascript = new ByteArrayOutputStream()
   val raw = new ByteArrayOutputStream()
@@ -36,6 +36,12 @@ final class DocSink {
   }
 }
 
+/** The error channel. The object cache captures the lines each fetch logs
+  * (`since`), which must not copy the whole channel on every fetch. */
+final class ErrorSink extends java.io.ByteArrayOutputStream {
+  def since(from: Int): Array[Byte] = java.util.Arrays.copyOfRange(buf, from, count)
+}
+
 private object Sentinel {
   val None = 0
   val ReadError = 1
@@ -56,6 +62,8 @@ private object Sentinel {
   * simpler and faster. All offsets are byte-exact.
   */
 final class PdfParser(val data: Array[Byte], val output: DocSink) {
+  import Filters.{hexVal, isWs}
+
   var pos: Int = 0
   val xref: mutable.LinkedHashMap[Int, XrefEntry] = mutable.LinkedHashMap.empty
   val trailer: PDict = PDict.empty
@@ -72,10 +80,10 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
   // of the object number, EXCEPT that parse abnormalities are logged to the
   // error sink per fetch — so the cache records the error lines emitted
   // during the first fetch and replays them on every hit, keeping the error
-  // channel byte-identical to the re-parsing reference. Caching stays OFF
-  // during load(): the security handler resolves /Encrypt's O/U/ID before
-  // the document key exists, and those raw reads must not be reused after
-  // decryption is armed.
+  // channel byte-identical to the re-parsing reference. Caching is OFF
+  // during load() and ON after it: the security handler resolves /Encrypt's
+  // O/U/ID before the document key exists, and those raw reads must not be
+  // reused after decryption is armed.
   private var cachingEnabled = false
 
   /** Mirrors Go's `parser.security_handler != nil`: set only after a
@@ -113,9 +121,6 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
     if (offset >= 0) pos = math.min(offset, len.toLong).toInt
 
   @inline def currentOffset: Long = pos.toLong
-
-  @inline private def isWs(b: Int): Boolean =
-    b == 0x00 || b == '\t' || b == '\n' || b == '\f' || b == '\r' || b == ' '
 
   @inline private def isDelim(b: Int): Boolean =
     b == '(' || b == ')' || b == '<' || b == '>' || b == '[' || b == ']' || b == '/' || b == '%'
@@ -169,7 +174,7 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
       if (err != null) return err
       securityActive = true // Go: parser.security_handler != nil from here on
     }
-    cachingEnabled = !sys.props.contains("graft.nocache")
+    cachingEnabled = true
     null
   }
 
@@ -210,9 +215,6 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
     if (j > i) j else -1
   }
 
-  // regex \s is [\t\n\f\r ]; the class adds \x00 — same set as PDF whitespace
-  @inline private def isSepWs(b: Int): Boolean = isWs(b)
-
   /** One-or-more separators starting at i, then stage continuation.
     * stage 0: digits then separators then "obj"; stage 1: "obj". Returns the
     * match end or -1. failMemo prunes repeated failing states. */
@@ -220,11 +222,12 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
     val key = (i.toLong << 2) | stage
     if (failMemo.contains(key)) return -1
     var r = -1
-    if (i < len && isSepWs(data(i))) {
+    // regex \s is [\t\n\f\r ]; the class adds \x00 — same set as PDF whitespace
+    if (i < len && isWs(data(i))) {
       // collapse a maximal whitespace run: interior stops cannot be followed
       // by digits/"obj"/'%', so only the run end matters
       var k = i
-      while (k < len && isSepWs(data(k))) k += 1
+      while (k < len && isWs(data(k))) k += 1
       r = afterSep(k, stage, failMemo)
     } else if (i < len && data(i) == '%') {
       var e = i + 1
@@ -310,7 +313,7 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
           if (j + 5 <= len && data(j) == '%' && data(j + 1) == '%' && data(j + 2) == 'E' && data(j + 3) == 'O' && data(j + 4) == 'F') {
             // parse the digit group; overflow => no result (strconv failure)
             val s = new String(data, ds, de - ds, ISO_8859_1)
-            result = try { Some(java.lang.Long.parseLong(s)) } catch { case _: Throwable => None }
+            result = try { Some(java.lang.Long.parseLong(s)) } catch { case _: NumberFormatException => None }
           }
         }
         i = m + marker.length
@@ -410,9 +413,7 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
           // — minus its 2 GB make([]byte, width) allocation, and minus the
           // makeslice panic a NEGATIVE width causes there (we degrade).
           if (w < 0 || w > stream.length - sp) return None
-          var v = 0L
-          var i = 0
-          while (i < w) { v = v * 256 + (stream(sp + i) & 0xff); i += 1 }
+          val v = Filters.bytesToInt(stream, sp, w)
           sp += w
           Some(v)
         }
@@ -472,10 +473,7 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
           // of this object would re-log them too)
           val before = if (output != null) output.errors.size() else 0
           val obj = fetchObject(number)
-          val captured =
-            if (output != null && output.errors.size() > before)
-              java.util.Arrays.copyOfRange(output.errors.toByteArray, before, output.errors.size())
-            else Array.emptyByteArray
+          val captured = if (output != null) output.errors.since(before) else Array.emptyByteArray
           objectCache(number) = (obj, captured)
           return obj
       }
@@ -734,32 +732,30 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
       return PString(Array.emptyByteArray)
     }
     while (true) {
-      val code = Array[Byte]('0', '0')
+      var code = 0 // the digits of this pair read so far
       var i = 0
       while (i < 2) {
         consumeWhitespace()
         val b = readByte()
         if (b == -1 || b == '>') {
           if (b == -1) logError(PdfErrors.UnclosedHexString)
-          if (i > 0) s.write(Integer.parseInt(new String(code, ISO_8859_1), 16))
+          if (i > 0) s.write(code * 16) // a missing final digit counts as 0
           val bytes = s.toByteArray
           decryptor.decrypt(bytes)
           return PString(bytes)
         }
-        if (!isHexByte(b)) {
+        val d = hexVal(b)
+        if (d < 0) {
           logError(PdfErrors.InvalidHexStringChar)
         } else {
-          code(i) = b.toByte
+          code = code * 16 + d
           i += 1
         }
       }
-      s.write(Integer.parseInt(new String(code, ISO_8859_1), 16))
+      s.write(code)
     }
     throw new IllegalStateException("unreachable")
   }
-
-  @inline private def isHexByte(b: Int): Boolean =
-    (b >= '0' && b <= '9') || (b >= 'a' && b <= 'f') || (b >= 'A' && b <= 'F')
 
   /** parser.go:709-749 */
   def readInt(): Option[Int] = readInt64().map(_.toInt)
@@ -783,15 +779,9 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
   /** parser.go:751-777 */
   def readKeyword(): PKeyword = {
     consumeWhitespace()
-    val sb = new StringBuilder
-    var going = true
-    while (going) {
-      val b = readByte()
-      if (b == -1) going = false
-      else if (isWs(b) || isDelim(b)) { unread(b); going = false }
-      else sb += b.toChar
-    }
-    PKeyword(sb.toString)
+    val start = pos
+    while (pos < len && !isWs(data(pos) & 0xff) && !isDelim(data(pos) & 0xff)) pos += 1
+    PKeyword(new String(data, start, pos - start, ISO_8859_1))
   }
 
   /** parser.go:779-837 */
@@ -807,19 +797,20 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
       else if (isDelim(b) || isWs(b)) { unread(b); going = false }
       else {
         if (b == '#') {
-          val code = Array[Byte]('0', '0')
+          var code = 0
           var i = 0
           var broke = false
           while (i < 2 && !broke) {
             val hb = readByte()
+            val d = hexVal(hb)
             if (hb == -1) broke = true
-            else if (!isHexByte(hb)) {
+            else if (d < 0) {
               logError(PdfErrors.InvalidNameEscapeChar)
               unread(hb)
               broke = true
-            } else { code(i) = hb.toByte; i += 1 }
+            } else { code = code * 16 + d; i += 1 }
           }
-          b = Integer.parseInt(new String(code, ISO_8859_1), 16)
+          b = code << (4 * (2 - i)) // digits never read count as 0
           if (b >= '!' && b <= '~' && b != '#' && !isDelim(b))
             logError(PdfErrors.UnnecessaryEscapeName)
         }
@@ -965,23 +956,21 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
           else if (b == 'f') b = '\f'
 
           if (b >= '0' && b <= '7') {
-            val code = new StringBuilder
-            code += b.toChar
+            var value = b - '0'
             var i = 0
             var broke = false
             while (i < 2 && !broke) {
               val ob = readByte()
               if (ob == -1) { logError(PdfErrors.UnclosedStringOctal); broke = true }
               else if (ob < '0' || ob > '7') { unread(ob); broke = true }
-              else code += ob.toChar
+              else value = value * 8 + (ob - '0')
               i += 1
             }
-            var value = Integer.parseInt(code.toString, 8)
             if (value > 255) {
               // octal too large: drop the last digit (parser.go:1092-1098)
               logError(PdfErrors.InvalidOctal)
               pos -= 1
-              value = Integer.parseInt(code.toString.dropRight(1), 8)
+              value /= 8
             }
             b = value
             if (b >= '!' && b <= '~' && b != '\\' && b != '(' && b != ')')

@@ -317,6 +317,18 @@ class ExtractWalkSpec extends AnyFunSuite {
     assert(deepDict.ok, String.valueOf(deepDict.failure))
   }
 
+  test("exception policy: which throwables end only their document") {
+    // an OOM stays a failure row until the decoders have an output budget
+    // (a flate bomb can ask for more than a byte array holds)
+    assert(PdfExtract.isolates(new IllegalStateException("x"), onBigStack = false))
+    assert(PdfExtract.isolates(new OutOfMemoryError("Required array length too large"), onBigStack = false))
+    assert(!PdfExtract.isolates(new StackOverflowError, onBigStack = false)) // retried first
+    assert(PdfExtract.isolates(new StackOverflowError, onBigStack = true))
+    assert(!PdfExtract.isolates(new InterruptedException, onBigStack = false))
+    assert(!PdfExtract.isolates(new InternalError("vm"), onBigStack = true))
+    assert(!PdfExtract.isolates(new NoClassDefFoundError("x"), onBigStack = false))
+  }
+
   test("JS as stream reference (object.go:87-89)") {
     val r = parse(
       """1 0 obj

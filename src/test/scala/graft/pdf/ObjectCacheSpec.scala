@@ -48,4 +48,28 @@ class ObjectCacheSpec extends AnyFunSuite {
     // page tree = [root, kid2, kid3]; root has no /Contents; kids share one
     assert(text == "shared\nshared\n", text)
   }
+
+  test("ErrorSink.since returns exactly the bytes appended after the mark") {
+    val sink = new ErrorSink
+    sink.write("first\n".getBytes(ISO_8859_1))
+    val mark = sink.size
+    sink.write("second\nthird\n".getBytes(ISO_8859_1))
+    assert(new String(sink.since(mark), ISO_8859_1) == "second\nthird\n")
+    assert(sink.since(sink.size).isEmpty)
+    assert(new String(sink.since(0), ISO_8859_1) == "first\nsecond\nthird\n")
+  }
+
+  test("error capture is linear: 40,000 erroring objects parse fast, errors intact") {
+    // each fetch logs one line that the cache captures; copying the whole
+    // error channel per capture would make this quadratic
+    val n = 40000
+    val body = (1 to n).map(i => s"$i 0 obj <<1>> endobj\n").mkString
+    val t0 = System.nanoTime()
+    val r = parse(body)
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(r.ok && r.nObjects == n)
+    // one line from the load-phase object scan, one from the fetch
+    assert(new String(r.errors, ISO_8859_1) == "invalid dictionary key type\n" * (2 * n))
+    assert(seconds < 2.0, f"took $seconds%.2f s")
+  }
 }
